@@ -646,13 +646,31 @@ def _slow_mode_signature(evid: dict, pin: float | None) -> bool:
 # "parsed": null for exactly this reason.
 LINE_BUDGET = 1900
 
+#: a query under this many seconds in BOTH rounds is never a mover: the
+#: ratio of two sub-0.2 s timings is scheduler noise, not a change
+MOVER_FLOOR_SEC = 0.2
+
+
+def _movers(timings: dict, prev_times: dict) -> list[str]:
+    """The 15 biggest round-over-round movers, by |log ratio| of this
+    round's time against the previous record's, among queries timed in
+    both rounds with ``max(prev, now) >= MOVER_FLOOR_SEC``."""
+    both = [n for n in timings
+            if isinstance(prev_times.get(n), (int, float))
+            and prev_times[n] > 0 and timings[n] > 0
+            and max(prev_times[n], timings[n]) >= MOVER_FLOOR_SEC]
+    return sorted(both, key=lambda n: -abs(
+        math.log(timings[n] / prev_times[n])))[:15]
+
 
 def _protocol_line(out: dict) -> str:
     """Serialize the stdout protocol dict, enforcing LINE_BUDGET.
 
-    Thinning order if a pathological round blows the budget: the top-5
-    query dict first, then truncate the regression list to 10 names plus
-    an explicit count (never silently — the marker names the dropped
+    Thinning order if a pathological round blows the budget: the mover
+    extension of the query dict first (back to the top 5 by cost), then
+    the duplicated canary factors, then truncate the regression, retry
+    and missing lists to 10 names plus an explicit count, and only then
+    empty the top-5 dict (never silently — each marker names the dropped
     field, and BENCH_DETAIL.json always has the full lists)."""
     out = dict(out)
     n_regressions = len(out.get("regressions_over_2x") or [])
@@ -663,10 +681,6 @@ def _protocol_line(out: dict) -> str:
         out["queries"] = dict(sorted(out["queries"].items(),
                                      key=lambda kv: -kv[1])[:5])
         out["queries_movers_thinned"] = True
-        line = json.dumps(out, separators=(",", ":"))
-    if len(line) > LINE_BUDGET:
-        out["queries"] = {}
-        out["queries_thinned"] = True   # self-describing, like the others
         line = json.dumps(out, separators=(",", ":"))
     if len(line) > LINE_BUDGET and out.get("flag_canary_factors"):
         # the per-flag canary factors are duplicated in
@@ -689,6 +703,10 @@ def _protocol_line(out: dict) -> str:
         regs = out["headline_missing_from_registry"]
         out["headline_missing_count"] = len(regs)
         out["headline_missing_from_registry"] = regs[:10]
+        line = json.dumps(out, separators=(",", ":"))
+    if len(line) > LINE_BUDGET:
+        out["queries"] = {}
+        out["queries_thinned"] = True   # self-describing, like the others
         line = json.dumps(out, separators=(",", ":"))
     if len(line) > LINE_BUDGET:
         # last-resort floor: a minimal core that can NEVER outgrow the
@@ -1063,11 +1081,7 @@ def main() -> None:
             prev_times = json.load(fh).get("queries", {}) or {}
     except (OSError, ValueError):
         pass
-    movers = sorted(
-        (n for n in timings if isinstance(prev_times.get(n), (int, float))
-         and prev_times[n] > 0 and timings[n] > 0),
-        key=lambda n: -abs(math.log(timings[n] / prev_times[n])))[:15]
-    for n in movers:
+    for n in _movers(timings, prev_times):
         top5.setdefault(n, timings[n])
     out = {
         "metric": "headline_queries_total_runtime",

@@ -10,11 +10,18 @@ Scale design:
   a stop-shingle filter caps the worst case).
 - MinHash+LSH: k min-hashes per doc computed row-locally over the shingle
   array (higher-order functions, ZERO shuffles — min over the multiset ==
-  min over the set), banded into b groups of r; candidate pairs join on
-  (band, band_key) buckets, then exact-Jaccard verification runs ONLY on
-  candidates.
-- SimHash: per-shingle 32-bit hash -> per-bit ±1 votes -> sign vector packed
-  to an int. One explode + one groupBy.
+  min over the set), banded into b groups of r; candidate pairs come from
+  :func:`banded_pairs` on (band, band_key), then exact-Jaccard
+  verification runs ONLY on candidates.
+- SimHash: per-shingle 32-bit hash -> per-bit ±1 votes folded inside the
+  row -> sign vector packed to an int. Row-local, no shuffle; near-dup
+  pairs come from the banded Hamming join shared with image/video dHash.
+
+Every banded / inverted-index candidate join (LSH bands, SimHash and
+dHash blocks, shingles, fingerprint words) is one :func:`banded_pairs`
+call: signature -> banded_pairs -> filter -> distinct -> verify. The one
+exception is the stream-static band join in streaming/joins.py, which
+keeps watermark state and shares only :func:`band_signatures`.
 
 All hashing is md5-derived (first 8 hex chars -> 32-bit int) so results are
 engine-reproducible — the DuckDB oracle computes the identical signatures.
@@ -96,6 +103,52 @@ def shingle_table(docs: DataFrame, id_col: str = "doc_id",
         F.explode(shingles_from_tokens(F.col("_toks"), n)).alias("shingle"))
 
 
+def banded_pairs(banded: DataFrame, keys: tuple[str, ...] = ("band", "key"),
+                 id_col: str = "doc_id",
+                 probe: DataFrame | None = None) -> DataFrame:
+    """Candidate id pairs from a keyed table: every two rows that agree
+    on all ``keys`` — the equi-join behind every banded / inverted-index
+    near-dup operator (LSH band keys, SimHash/dHash blocks, shingles,
+    fingerprint words). Returns (id_a, id_b, *extras) with id_a < id_b.
+
+    - Self mode (``probe=None``): ``banded`` joins itself with
+      ``a.id < b.id``. The ids are projected as they are: the band
+      table's id hash partitioning then survives the join, so the
+      caller's distinct needs no extra Exchange (least/greatest would
+      hide it).
+    - Probe mode: ``probe`` (same columns; small, e.g. a daily batch)
+      broadcasts against ``banded`` (the store) with ``a.id != b.id``,
+      ids ordered by least/greatest — the store never shuffles. Pairs
+      inside the probe are found when the store includes the probe.
+
+    Every non-key column rides along as ``<col>_a`` / ``<col>_b`` (the
+    values of id_a's / id_b's row), so callers can filter before they
+    deduplicate. A pair agreeing on several keys repeats: the caller
+    applies its own filter, then ``.distinct()`` (or aggregates)."""
+    extras = [c for c in banded.columns if c != id_col and c not in keys]
+    ia, ib = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    if probe is None:
+        left, on = banded, on + [ia < ib]
+        ids = [ia.alias("id_a"), ib.alias("id_b")]
+
+        def pick(x: Column, y: Column) -> Column:
+            return x
+    else:
+        left, on = F.broadcast(probe), on + [ia != ib]
+        ids = [F.least(ia, ib).alias("id_a"),
+               F.greatest(ia, ib).alias("id_b")]
+
+        def pick(x: Column, y: Column) -> Column:
+            return F.when(ia < ib, x).otherwise(y)
+    return (left.alias("a").join(banded.alias("b"), on)
+            .select(*ids,
+                    *[pick(F.col(f"a.{c}"), F.col(f"b.{c}")).alias(f"{c}_a")
+                      for c in extras],
+                    *[pick(F.col(f"b.{c}"), F.col(f"a.{c}")).alias(f"{c}_b")
+                      for c in extras]))
+
+
 # -- exact dedup ---------------------------------------------------------------
 
 
@@ -140,14 +193,8 @@ def _common_counts(docs: DataFrame, id_col: str, text_col: str, n: int,
                .select("shingle"))
         sh = sh.join(F.broadcast(hot), "shingle", "left_anti").alias("s")
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                 F.col(f"b.{id_col}").alias("id_b"))
-        .agg(F.count("*").alias("common"))
-    )
+    common = (banded_pairs(sh, ("shingle",), id_col)
+              .groupBy("id_a", "id_b").agg(F.count("*").alias("common")))
     sa = sizes.select(F.col(id_col).alias("id_a"),
                       F.col("n_sh").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"),
@@ -337,16 +384,8 @@ def lsh_candidate_pairs(sig: DataFrame, bands: int = 4, rows: int = 4,
                         id_col: str = "doc_id") -> DataFrame:
     """Band the signature into ``bands`` groups of ``rows``; docs sharing any
     band key are candidates. Emits distinct (id_a, id_b), id_a < id_b."""
-    banded = band_signatures(sig, bands, rows, id_col)
-    a, b = banded.alias("a"), banded.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"))
-        .distinct()
-    )
+    return banded_pairs(band_signatures(sig, bands, rows, id_col),
+                        id_col=id_col).distinct()
 
 
 def verify_pairs(docs: DataFrame, cand: DataFrame, threshold: float = 0.5,
@@ -458,14 +497,9 @@ def minhash_lsh_neardup_windowed(docs: DataFrame, day_col: str,
                     F.explode(F.array(
                         F.floor(F.col(day_col) / window),
                         F.floor(F.col(day_col) / window) + 1)).alias("_tb")))
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col("a._tb") == F.col("b._tb"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .filter(F.abs(F.col("a._day") - F.col("b._day")) <= window)
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"))
+    cand = (banded_pairs(bucketed, ("band", "key", "_tb"), id_col)
+            .filter(F.abs(F.col("_day_a") - F.col("_day_b")) <= window)
+            .select("id_a", "id_b")
             .distinct()
             .persist())
     cand.count()
@@ -543,17 +577,10 @@ def incremental_neardup(new_docs: DataFrame, stored_docs: DataFrame,
                                  text_col, n).localCheckpoint()
     if stored_sig is None:
         stored_sig = minhash_signatures(stored_docs, k, id_col, text_col, n)
-    bn = band_signatures(new_sig, bands, rows, id_col).alias("a")
-    bt = band_signatures(stored_sig.unionByName(new_sig), bands, rows,
-                         id_col).alias("b")
-    cand = (F.broadcast(bn)
-            .join(bt, (F.col("a.band") == F.col("b.band"))
-                  & (F.col("a.key") == F.col("b.key"))
-                  & (F.col(f"a.{id_col}") != F.col(f"b.{id_col}")))
-            .select(F.least(F.col(f"a.{id_col}"),
-                            F.col(f"b.{id_col}")).alias("id_a"),
-                    F.greatest(F.col(f"a.{id_col}"),
-                               F.col(f"b.{id_col}")).alias("id_b"))
+    store = band_signatures(stored_sig.unionByName(new_sig), bands, rows,
+                            id_col)
+    probe = band_signatures(new_sig, bands, rows, id_col)
+    cand = (banded_pairs(store, id_col=id_col, probe=probe)
             .distinct()
             .persist())
     cand.count()
@@ -598,21 +625,6 @@ def simhash(docs: DataFrame, bits: int = 32, id_col: str = "doc_id",
         term = F.when(vote(j) > 0, F.lit(1 << j)).otherwise(F.lit(0))
         packed = term if packed is None else packed + term
     return hashed.select(F.col(id_col), packed.cast("long").alias("simhash"))
-
-
-def simhash_buckets(fingerprints: DataFrame, half_bits: int = 16,
-                    id_col: str = "doc_id") -> DataFrame:
-    """Hamming-candidate buckets: docs agreeing on either 16-bit half
-    are candidates. Pigeonhole over TWO blocks guarantees all pairs at
-    TOTAL Hamming distance <= 1 (one differing bit can ruin only one
-    half); a pair with one flipped bit in EACH half (distance 2)
-    matches neither index — for distance-d recall use
-    :func:`simhash_neardup` with bands > d."""
-    mask = (1 << half_bits) - 1
-    return fingerprints.select(
-        F.col(id_col), F.col("simhash"),
-        (F.col("simhash").bitwiseAND(F.lit(mask))).alias("lo"),
-        F.shiftright("simhash", half_bits).bitwiseAND(F.lit(mask)).alias("hi"))
 
 
 # -- embedding-cosine near-dup --------------------------------------------------
@@ -716,13 +728,7 @@ def embedding_neardup_lsh(corpus: DataFrame, threshold: float = 0.45,
         F.col(id_col),
         F.posexplode(_band_keys_udf(planes, bands, rows)(F.col("uvec")))
         .alias("band", "key")))
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"))
-            .distinct())
+    cand = banded_pairs(banded, id_col=id_col).distinct()
     ua = unit.select(F.col(id_col).alias("id_a"), F.col("uvec").alias("ua"))
     ub = unit.select(F.col(id_col).alias("id_b"), F.col("uvec").alias("ub"))
     return (cand.join(ua, "id_a").join(ub, "id_b")
@@ -1082,14 +1088,8 @@ def semantic_dedup_lsh(corpus: DataFrame, k: int = 8, threshold: float = 0.9,
                       F.posexplode(
                           _band_keys_udf(planes, bands, rows)(F.col("uvec")))
                       .alias("band", "key")))
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (a.join(b, (F.col("a.centroid_id") == F.col("b.centroid_id"))
-                   & (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.key") == F.col("b.key"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("id_a"),
-                    F.col(f"b.{id_col}").alias("id_b"))
-            .distinct())
+    cand = banded_pairs(banded, ("centroid_id", "band", "key"),
+                        id_col).distinct()
     ua = assigned.select(F.col(id_col).alias("id_a"),
                          F.col("uvec").alias("ua"))
     ub = assigned.select(F.col(id_col).alias("id_b"),
@@ -1458,12 +1458,6 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.2,
     # (in practice the AllPairs prefix index IS a materialized artifact)
     prefix = (ranked.filter(F.col("_pos") <= plen)
               .select(id_col, "shingle", "_pos", "_sz").localCheckpoint())
-    a = prefix.select(F.col(id_col).alias("id_a"),
-                      F.col("_pos").alias("pa"),
-                      F.col("_sz").alias("sa"), "shingle")
-    b = prefix.select(F.col(id_col).alias("id_b"),
-                      F.col("_pos").alias("pb"),
-                      F.col("_sz").alias("sb"), "shingle")
     # LENGTH filter (Jaccard >= t ⇒ t·|x| <= |y| and t·|y| <= |x|) and
     # POSITIONAL filter (Xiao et al. 2008 §3.2): at the first common
     # shingle w (positions pa/pb under the shared global order) overlap
@@ -1477,14 +1471,12 @@ def prefix_filter_pairs(docs: DataFrame, threshold: float = 0.2,
     # required-overlap ceil is (t_bp·(sa+sb) + den - 1) div den with
     # den = 10000 + t_bp, from α = ceil(t/(1+t)·(|x|+|y|))).
     den = 10000 + t_bp
-    alpha = F.floor((F.lit(t_bp) * (F.col("sa") + F.col("sb"))
-                     + F.lit(den - 1)) / F.lit(den))
-    cand = (a.join(b, "shingle")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter((F.col("sa") * t_bp <= F.col("sb") * 10000)
-                    & (F.col("sb") * t_bp <= F.col("sa") * 10000))
-            .filter(F.lit(1) + F.least(F.col("sa") - F.col("pa"),
-                                       F.col("sb") - F.col("pb")) >= alpha)
+    pa, pb = F.col("_pos_a"), F.col("_pos_b")
+    sa, sb = F.col("_sz_a"), F.col("_sz_b")
+    alpha = F.floor((F.lit(t_bp) * (sa + sb) + F.lit(den - 1)) / F.lit(den))
+    cand = (banded_pairs(prefix, ("shingle",), id_col)
+            .filter((sa * t_bp <= sb * 10000) & (sb * t_bp <= sa * 10000))
+            .filter(F.lit(1) + F.least(sa - pa, sb - pb) >= alpha)
             .select("id_a", "id_b").distinct()
             .persist())
     cand.count()
@@ -1506,39 +1498,54 @@ def simhash_neardup(docs: DataFrame, max_hamming: int = 3, bands: int = 4,
     Returns (id_a, id_b, hamming). Scale: fingerprints are row-local;
     the only shuffles are the block-key equi-join (each doc appears in
     ``bands`` buckets) and the verified-pair dedup."""
+    return _banded_hamming_pairs(
+        simhash(docs, bits=bits, id_col=id_col, text_col=text_col, n=n),
+        "simhash", max_hamming, bands, id_col, op="simhash_neardup",
+        bits=bits)
+
+
+def _banded_hamming_pairs(hashes: DataFrame, hash_col: str,
+                          max_hamming: int, bands: int, id_col: str,
+                          op: str, bits: int = 64,
+                          extra_col: str | None = None) -> DataFrame:
+    """Banded-Hamming near-dup pairs over a ``bits``-wide integer hash,
+    shared by :func:`simhash_neardup` and the perceptual dHash joins
+    (``multimodal.dhash_neardup`` image-level,
+    ``multimodal.video_dhash_neardup`` keyframe-level): guard the
+    pigeonhole bound, split each hash into ``bands`` contiguous keys,
+    :func:`banded_pairs` on (band, key), ``bit_count`` verify, distinct
+    (multi-band agreement). ``extra_col`` (e.g. a frame index) is carried
+    through as ``{extra_col}_a/_b``.
+
+    Returns (id_a, id_b[, extra_a, extra_b], hamming) with id_a < id_b."""
     if max_hamming >= bands:
         raise ValueError(
-            f"simhash_neardup: max_hamming={max_hamming} >= bands={bands} "
-            f"voids the pigeonhole guarantee — pairs may differ in every "
-            f"block and be missed; raise bands above max_hamming")
+            f"{op}: max_hamming={max_hamming} >= bands={bands} "
+            f"voids the pigeonhole guarantee (pairs at Hamming distance "
+            f">= {bands} can miss every band); raise bands or lower "
+            f"max_hamming")
     if bits % bands:
-        raise ValueError(f"simhash_neardup: bits={bits} not divisible "
-                         f"by bands={bands}")
-    # materialize fingerprints before the self-join (two subplan
-    # branches) — the bit-vote fold is the expensive stage and the
-    # (id, long) table it produces is tiny
-    fp = simhash(docs, bits=bits, id_col=id_col, text_col=text_col,
-                 n=n).localCheckpoint()
-    bb = bits // bands
-    mask = (1 << bb) - 1
-    keyed = fp.select(
-        F.col(id_col), "simhash",
-        F.explode(F.array(*[
-            F.struct(F.lit(bi).alias("band"),
-                     F.shiftright("simhash", bi * bb)
-                     .bitwiseAND(F.lit(mask)).alias("key"))
-            for bi in range(bands)])).alias("_bk")) \
-        .select(id_col, "simhash", "_bk.band", "_bk.key")
-    a = keyed.select(F.col(id_col).alias("id_a"),
-                     F.col("simhash").alias("sh_a"), "band", "key")
-    b = keyed.select(F.col(id_col).alias("id_b"),
-                     F.col("simhash").alias("sh_b"), "band", "key")
-    return (a.join(b, ["band", "key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b",
-                    F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-                    .alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
+        raise ValueError(f"{op}: bands={bands} must divide {bits}")
+    width = bits // bands
+    mask = (1 << width) - 1
+    extras = [extra_col] if extra_col else []
+    # materialize the (narrow) hash table ONCE before mirroring it into
+    # the self-join: the join's two sides are separate subplans, so the
+    # upstream hash stage — SimHash's bit-vote fold, or a decode +
+    # perceptual-hash mapInPandas — would otherwise execute twice (the
+    # same discipline audio_fp_neardup applies to its word index)
+    h = (hashes.select(F.col(id_col), F.col(hash_col).alias("_h"), *extras)
+         .localCheckpoint())
+    keyed = h.select(id_col, "_h", *extras, F.posexplode(F.array(*[
+        F.shiftrightunsigned("_h", b * width).bitwiseAND(F.lit(mask))
+        for b in range(bands)])).alias("band", "key"))
+    hamming = F.bit_count(F.col("_h_a").bitwiseXOR(F.col("_h_b")))
+    out_cols = ["id_a", "id_b"]
+    if extra_col:
+        out_cols = ["id_a", f"{extra_col}_a", "id_b", f"{extra_col}_b"]
+    return (banded_pairs(keyed, id_col=id_col)
+            .filter(hamming <= max_hamming)
+            .select(*out_cols, hamming.alias("hamming"))
             .distinct())
 
 

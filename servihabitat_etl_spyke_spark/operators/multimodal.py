@@ -35,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..catalog import spread
+from .dedup import _banded_hamming_pairs, banded_pairs
 
 #: metadata struct carried alongside every blob
 MEDIA_META_SCHEMA = ("media_type string, n_bytes long, digest string, "
@@ -483,64 +484,6 @@ def dhash_neardup(hashes: DataFrame, max_hamming: int = 6,
     here rather than silently degrading to approximate recall."""
     return _banded_hamming_pairs(hashes, hash_col, max_hamming, bands,
                                  id_col, op="dhash_neardup")
-
-
-def _banded_hamming_pairs(hashes: DataFrame, hash_col: str,
-                          max_hamming: int, bands: int, id_col: str,
-                          op: str,
-                          extra_col: str | None = None) -> DataFrame:
-    """Shared banded-Hamming candidate machinery for the 64-bit
-    perceptual-hash near-dup joins (:func:`dhash_neardup` image-level,
-    :func:`video_dhash_neardup` keyframe-level): guard the pigeonhole
-    bound, explode each hash into ``bands`` contiguous keys, band
-    equi-join, ``bit_count`` verify, distinct. ``extra_col`` (e.g. a
-    frame index) is carried through as ``{extra_col}_a/_b``.
-
-    Returns (id_a, id_b[, extra_a, extra_b], hamming) with id_a < id_b."""
-    if max_hamming >= bands:
-        raise ValueError(
-            f"{op}: max_hamming={max_hamming} >= bands={bands} "
-            f"voids the pigeonhole guarantee (pairs at Hamming distance "
-            f">= {bands} can miss every band); raise bands or lower "
-            f"max_hamming")
-    if 64 % bands:
-        raise ValueError(f"bands={bands} must divide 64")
-    width = 64 // bands
-    mask = (1 << width) - 1
-    cols = [F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")]
-    extras = [F.col(extra_col).alias("_x")] if extra_col else []
-    # materialize the (narrow) hash table ONCE before mirroring it into
-    # the self-join: side('a') and side('b') are separate subplans, so
-    # an upstream decode+perceptual-hash mapInPandas — the dominant cost
-    # for image/video near-dup — would otherwise execute twice (the same
-    # discipline audio_fp_neardup applies to its word index)
-    h = hashes.select(*cols, *extras).localCheckpoint()
-    banded = h.select(
-        "_id", "_h", *(["_x"] if extra_col else []),
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.shiftrightunsigned(F.col("_h"), b * width)
-                     .bitwiseAND(F.lit(mask)).alias("key"))
-            for b in range(bands)])).alias("bk")) \
-        .select("_id", "_h", *(["_x"] if extra_col else []),
-                "bk.band", "bk.key")
-
-    def side(tag: str) -> DataFrame:
-        sel = [F.col("_id").alias(f"id_{tag}"),
-               F.col("_h").alias(f"h{tag}"), "band", "key"]
-        if extra_col:
-            sel.insert(1, F.col("_x").alias(f"{extra_col}_{tag}"))
-        return banded.select(*sel)
-
-    hamming = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    out_cols = ["id_a", "id_b"]
-    if extra_col:
-        out_cols = ["id_a", f"{extra_col}_a", "id_b", f"{extra_col}_b"]
-    return (side("a").join(side("b"), ["band", "key"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(hamming <= max_hamming)
-            .select(*out_cols, hamming.alias("hamming"))
-            .distinct())                  # multi-band agreement dedup
 
 
 def image_feature_vector(px: np.ndarray, dim: int = 16) -> list[float]:
@@ -1023,13 +966,10 @@ def audio_fp_neardup(blobs: DataFrame, min_shared: int = 3,
     # rfft fingerprint mapInPandas — by far the dominant cost — would
     # otherwise execute twice (and a third time when a downstream
     # connected-components pass re-reads the pairs). Same discipline as
-    # prefix_filter_pairs' prefix index (dedup.py:1280).
+    # prefix_filter_pairs' prefix index.
     w = (audio_fp_words(blobs, win, hop, bands, word_frames, id_col)
          .localCheckpoint())
-    a = w.select(F.col(id_col).alias("id_a"), "word")
-    b = w.select(F.col(id_col).alias("id_b"), "word")
-    return (a.join(b, "word")
-            .filter(F.col("id_a") < F.col("id_b"))
+    return (banded_pairs(w, ("word",), id_col)
             .groupBy("id_a", "id_b")
             .agg(F.count("*").alias("n_shared_words"))
             .filter(F.col("n_shared_words") >= min_shared))
@@ -1338,7 +1278,7 @@ def video_dhash_neardup(keyframes: DataFrame, max_hamming: int = 3,
     keyframe pairs. Output: (id_a, id_b, best_hamming, n_matching_pairs).
 
     Same bucket-join-then-verify shape as :func:`dhash_neardup` — shared
-    via :func:`_banded_hamming_pairs` (frame_idx carried through the
+    via ``dedup._banded_hamming_pairs`` (frame_idx carried through the
     band join); the extra per-pair aggregation is a tiny groupBy over
     verified pairs only."""
     pairs = _banded_hamming_pairs(keyframes, "dhash", max_hamming, bands,

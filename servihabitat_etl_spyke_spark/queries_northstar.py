@@ -2972,32 +2972,15 @@ def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_sig = D.minhash_signatures(new).localCheckpoint()
     banded_stored = D.band_signatures(stored_sig)
     banded_new = D.band_signatures(new_sig)
-    a, b = banded_stored.alias("a"), banded_stored.alias("b")
-    cand_old = (  # == lsh_candidate_pairs(stored_sig)
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.key") == F.col("b.key"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b")))
-    bt = banded_stored.unionByName(banded_new).alias("t")
-    bn = banded_new.alias("n")
-    cand_new = (  # == incremental_neardup's broadcast band probe
-        F.broadcast(bn)
-        .join(bt, (F.col("n.band") == F.col("t.band"))
-              & (F.col("n.key") == F.col("t.key"))
-              & (F.col("n.doc_id") != F.col("t.doc_id")))
-        .select(F.least(F.col("n.doc_id"), F.col("t.doc_id")).alias("id_a"),
-                F.greatest(F.col("n.doc_id"),
-                           F.col("t.doc_id")).alias("id_b")))
-    cand = (cand_old
-            .select("id_a", "id_b", F.lit(1).alias("_stored"),
-                    F.lit(0).alias("_new"))
-            .unionByName(cand_new.select(
-                "id_a", "id_b", F.lit(0).alias("_stored"),
-                F.lit(1).alias("_new")))
-            .groupBy("id_a", "id_b")
-            .agg(F.max("_stored").alias("_stored"),
-                 F.max("_new").alias("_new"))
+    # the two legs are DISJOINT — every probe pair holds a new id
+    # (doc_id % 5 == 0) and no stored pair does — so one distinct over
+    # the tagged union dedups both legs and no tag merge is needed
+    cand = (D.banded_pairs(banded_stored)
+            .withColumn("_stored", F.lit(True))
+            .unionByName(D.banded_pairs(
+                banded_stored.unionByName(banded_new), probe=banded_new)
+                .withColumn("_stored", F.lit(False)))
+            .distinct()
             .persist())
     cand.count()                    # materialize once — verify_pairs
     ver = D.verify_pairs(           # broadcasts its candidate list twice
@@ -3009,9 +2992,8 @@ def dedup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = (ver.join(F.broadcast(cand), ["id_a", "id_b"])
               .localCheckpoint())
     labels1 = D.connected_components(
-        tagged.filter(F.col("_stored") == 1)
-        .select("id_a", "id_b", "jaccard"))
-    new_pairs = (tagged.filter(F.col("_new") == 1)
+        tagged.filter(F.col("_stored")).select("id_a", "id_b", "jaccard"))
+    new_pairs = (tagged.filter(~F.col("_stored"))
                  .select("id_a", "id_b", "jaccard"))
     # no presentational global orderBy (r8): the driver/oracle hash is
     # order-insensitive and the range-sampling pass + sort cost a job

@@ -138,12 +138,22 @@ def test_protocol_line_thins_movers_before_dropping_queries():
     line = bench._protocol_line(out)
     assert len(line) <= bench.LINE_BUDGET
     parsed = json.loads(line)
-    if parsed.get("queries"):
-        assert len(parsed["queries"]) == 5
-        assert parsed["queries_movers_thinned"] is True
-        # the survivors are the 5 SLOWEST, not an arbitrary subset
-        assert set(parsed["queries"]) == {
-            f"mover_query_with_a_long_name_{i:02d}" for i in range(15, 20)}
+    # the thinned branch must actually be taken: top-5 fits the budget
+    assert parsed["queries"]
+    assert len(parsed["queries"]) == 5
+    assert parsed["queries_movers_thinned"] is True
+    # the survivors are the 5 SLOWEST, not an arbitrary subset
+    assert set(parsed["queries"]) == {
+        f"mover_query_with_a_long_name_{i:02d}" for i in range(15, 20)}
+
+
+def test_movers_skip_sub_floor_timings():
+    """A 3x move between two tiny timings is scheduler noise and never
+    a mover; a 2x move on a query past the floor is."""
+    prev = {"tiny": 0.01, "real": 1.0, "gone": 5.0}
+    now = {"tiny": 0.03, "real": 2.0, "new": 4.0}
+    assert bench._movers(now, prev) == ["real"]
+    assert bench._movers({"a": 0.19}, {"a": 0.21}) == ["a"]
 
 
 def test_regression_gate_rule():

@@ -163,6 +163,68 @@ def test_incremental_equals_full_restricted(spark, sf_dir):
     assert sorted(map(tuple, inc)) == sorted(map(tuple, full))
 
 
+def _brute_banded_pairs(rows):
+    """Every (lo, hi) id pair of (id, band, key, day) rows sharing a
+    (band, key) bucket."""
+    return {(min(r[0], s[0]), max(r[0], s[0]))
+            for r in rows for s in rows
+            if r[0] != s[0] and r[1:3] == s[1:3]}
+
+
+_BANDED_SCHEMA = "doc_id long, band int, key string, day int"
+# day == 10 * doc_id, so a ride-along value names the row it came from
+_STORE = [(1, 0, "x", 10), (1, 1, "p", 10),
+          (2, 0, "x", 20), (2, 1, "p", 20),     # shares TWO bands with 1
+          (3, 0, "y", 30), (3, 1, "p", 30),
+          (4, 0, "z", 40), (4, 1, "q", 40)]
+_PROBE = [(0, 0, "y", 0), (0, 1, "s", 0),       # lower id than its match
+          (5, 0, "z", 50), (5, 1, "r", 50),
+          (6, 0, "w", 60), (6, 1, "r", 60)]     # probe-probe pair (5, 6)
+
+
+def test_banded_pairs_self_mode_matches_brute_force(spark):
+    """Self mode: candidates repeat per shared band (the primitive never
+    deduplicates), and after the caller's distinct equal the brute-force
+    pair set — no self pairs, id_a < id_b, ride-along columns from
+    their own row."""
+    from servihabitat_etl_spyke_spark.operators.dedup import banded_pairs
+    store = spark.createDataFrame(_STORE, _BANDED_SCHEMA)
+    raw = banded_pairs(store).collect()
+    assert sorted(raw[0].asDict()) == ["day_a", "day_b", "id_a", "id_b"]
+    assert sum((r["id_a"], r["id_b"]) == (1, 2) for r in raw) == 2
+    assert all(r["id_a"] < r["id_b"] for r in raw)
+    assert all(r["day_a"] == 10 * r["id_a"] and r["day_b"] == 10 * r["id_b"]
+               for r in raw)
+    got = [tuple(r) for r in
+           banded_pairs(store).select("id_a", "id_b").distinct().collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == _brute_banded_pairs(_STORE) == {(1, 2), (1, 3),
+                                                        (2, 3)}
+
+
+def test_banded_pairs_probe_mode_is_self_mode_touching_probe(spark):
+    """Probe mode returns exactly the self-mode pairs over store ∪ probe
+    that touch a probe id, ids ordered and ride-alongs swapped with
+    them."""
+    from pyspark.sql import functions as F
+    from servihabitat_etl_spyke_spark.operators.dedup import banded_pairs
+    store = spark.createDataFrame(_STORE + _PROBE, _BANDED_SCHEMA)
+    probe = spark.createDataFrame(_PROBE, _BANDED_SCHEMA)
+    raw = banded_pairs(store, probe=probe).collect()
+    assert all(r["id_a"] < r["id_b"] for r in raw)
+    assert all(r["day_a"] == 10 * r["id_a"] and r["day_b"] == 10 * r["id_b"]
+               for r in raw)
+    got = {(r["id_a"], r["id_b"]) for r in raw}
+    probe_ids = {r[0] for r in _PROBE}
+    want = {p for p in _brute_banded_pairs(_STORE + _PROBE)
+            if probe_ids & set(p)}
+    assert got == want == {(0, 3), (4, 5), (5, 6)}
+    via_self = {(r["id_a"], r["id_b"]) for r in banded_pairs(store)
+                .filter(F.col("id_a").isin(*probe_ids)
+                        | F.col("id_b").isin(*probe_ids)).collect()}
+    assert got == via_self
+
+
 def test_connected_components_raises_on_nonconvergence(spark):
     """Exiting by iteration cap with labels still moving must raise, not
     return silently-wrong cluster ids."""

@@ -124,6 +124,25 @@ def test_embedding_neardup_lsh_is_hash_join_not_nested_loop(spark, sf_dir):
     assert "NestedLoop" not in plan
 
 
+def test_lsh_candidate_distinct_needs_no_exchange(spark, sf_dir):
+    """banded_pairs' self mode projects the ids as they are, so the band
+    table's doc_id hash partitioning survives the band join and the
+    candidate distinct runs with no Exchange after the join — wrapping
+    the ids in least/greatest hides that partitioning and adds a
+    shuffle before the distinct (one more stage per LSH consumer)."""
+    from servihabitat_etl_spyke_spark.catalog import load_table
+    from servihabitat_etl_spyke_spark.operators.dedup import (
+        lsh_candidate_pairs, minhash_signatures)
+    docs = load_table(spark, sf_dir, "documents")
+    plan = (lsh_candidate_pairs(minhash_signatures(docs))
+            ._jdf.queryExecution().executedPlan().toString())
+    lines = plan.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "HashAggregate" in ln)
+    join = next(i for i, ln in enumerate(lines) if "Join" in ln)
+    assert "keys=[id_a#" in lines[top] and top < join, plan
+    assert not any("Exchange" in ln for ln in lines[top:join]), plan
+
+
 def test_flow_map_filter_uses_arrow_not_row_python(spark, sf_dir):
     """The flow operators are the sanctioned Python path: they must use
     Arrow-batched mapInPandas (MapInPandas/ArrowEvalPython), never

@@ -218,20 +218,25 @@ class Engine:
     def delete(self, model_name: str, item_ids: list) -> None:
         """Keyed delete from a runtime model's store (the AutoAPI DELETE
         endpoint; the reference's cascade hooks are the flow callbacks —
-        compose them before calling): one anti-join, same shape as the
-        upsert's replace half."""
+        compose them before calling): one keyed filter, same shape as
+        the upsert's replace half. Ids match via the same predicate as
+        :meth:`read` (listquery._eq_predicate), so ``delete(m, [1])``
+        removes the row ``read(m, 1)`` finds, double and boolean ids
+        included."""
         from pyspark.sql import functions as F
+        from .plans.listquery import _eq_predicate
         if model_name not in self._runtime_tables:
             raise KeyError(f"{model_name!r} is not a runtime model")
         m = self._models[model_name]
         cur = self._runtime_tables[model_name]
-        gone = [str(i) for i in item_ids]
-        idc = F.col(m.id_field).cast("string")
-        # NULL-id rows must survive: ~isin(...) is NULL (not true) for a
-        # NULL id and filter drops NULL predicates, so deleting one key
+        hit = F.lit(False)
+        for i in item_ids:
+            hit = hit | _eq_predicate(cur, m.id_field, i)
+        # NULL-id rows must survive: ~hit is NULL (not true) for a NULL
+        # id and filter drops NULL predicates, so deleting one key
         # would silently destroy every null-id row
         self._runtime_tables[model_name] = cur.filter(
-            idc.isNull() | ~idc.isin(gone))
+            F.col(m.id_field).isNull() | ~hit)
         self._registry_version += 1
 
     def model(self, name: str) -> Model:

@@ -282,12 +282,6 @@ def cascade_delete(parent: DataFrame, children: DataFrame, fk_col: str,
     return parent_after, children_after
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S5 analog: persist the snapshot (CREATE TABLE IF NOT EXISTS +
-    PutItem loop becomes one parquet write)."""
-    df.write.mode(mode).parquet(path)
-
-
 # name of the zero-byte file a swap writes into the OUTGOING snapshot
 # directory right before renaming it to '._old' (see recover_snapshot).
 # Underscore-prefixed, so parquet readers skip it (the Hadoop

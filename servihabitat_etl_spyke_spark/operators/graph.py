@@ -28,8 +28,7 @@ def degrees(edges: DataFrame, id_a: str = "id_a",
 def pagerank(edges: DataFrame, damping: float = 0.85, iters: int = 10,
              id_a: str = "id_a", id_b: str = "id_b",
              directed: bool = False,
-             checkpoint_every: int = 4,
-             final_checkpoint: bool = False) -> DataFrame:
+             checkpoint_every: int = 4) -> DataFrame:
     """PageRank by power iteration. Returns (v, rank); ranks sum to 1.
 
     ``directed=False`` (the near-dup/kNN-graph case) mirrors every edge.
@@ -48,14 +47,12 @@ def pagerank(edges: DataFrame, damping: float = 0.85, iters: int = 10,
     rounds inside the 1-row dangling aggregate, so pass 1 there if the
     dangling set is large.
 
-    ``final_checkpoint=True`` (r8 ADVICE) materializes the result with
-    a tail localCheckpoint: a consumer that takes MULTIPLE actions on
-    the returned frame then re-reads pinned ranks instead of
-    re-executing the final sub-interval — and, because float sums are
-    fold-order dependent, instead of possibly observing DIFFERENT
-    quantized ranks across actions. Default False: single-action
-    consumers (the common case, incl. the bench queries) should not pay
-    a separate materialization job."""
+    The result is lazy: the final partial interval runs inside the
+    consumer's first action. A consumer that takes MULTIPLE actions
+    should ``.localCheckpoint()`` the result, so it re-reads pinned
+    ranks instead of re-executing that interval — and, because float
+    sums are fold-order dependent, instead of possibly observing
+    DIFFERENT quantized ranks across actions."""
     e = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     if not directed:
         e = e.union(edges.select(F.col(id_b).alias("src"),
@@ -160,4 +157,4 @@ def pagerank(edges: DataFrame, damping: float = 0.85, iters: int = 10,
         # themselves if they re-read it.
         if it % checkpoint_every == checkpoint_every - 1 and it != iters - 1:
             ranks = ranks.localCheckpoint()
-    return ranks.localCheckpoint() if final_checkpoint else ranks
+    return ranks

@@ -12,9 +12,8 @@ Two paths:
 - **IVF-style ANN**: coarse quantizer = per-label centroids (k-means stand-in;
   any trained codebook drops in); probe the nearest n_probe centroids.
 
-A vectorized pandas-UDF scorer (`cosine_topk_pandas`) is provided for the
-bench path — numpy matmul over Arrow batches beats per-element JVM
-expression trees on wide vectors.
+Every neighbor search ends in the same per-query ranking step,
+:func:`_rank_topk`.
 """
 
 from __future__ import annotations
@@ -140,18 +139,34 @@ def _dim_of(df: DataFrame, vec_col: str, op: str) -> int:
     return len(row[0])
 
 
+def _rank_topk(scored: DataFrame, k: int, by: str = "score",
+               descending: bool = True,
+               with_score: bool = False) -> DataFrame:
+    """Per-query top-k of a (query_id, neighbor_id, ``by``) candidate
+    table under the total order (``by`` best-first, neighbor_id asc) —
+    the same order as :func:`_topk_idx`, which is what makes merging
+    per-partition or per-cell top-k lists exact (top-k of a union ==
+    top-k of per-part top-k unioned). Returns (query_id, neighbor_id,
+    rank), plus ``by`` when ``with_score``. No global sort: ``rank``
+    carries the order, and an order-insensitive consumer (hash gate,
+    aggregation, join, table write) would pay a range-sampling
+    re-execution of the scoring plan for nothing."""
+    key = F.col(by).desc() if descending else F.col(by).asc()
+    w = W.partitionBy("query_id").orderBy(key, "neighbor_id")
+    cols = ["query_id", "neighbor_id", F.row_number().over(w).alias("rank")]
+    if with_score:
+        cols.append(by)
+    return scored.select(*cols).filter(F.col("rank") <= k)
+
+
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                ordered: bool = True) -> DataFrame:
+                id_col: str = "vec_id",
+                vec_col: str = "embedding") -> DataFrame:
     """Exact top-k neighbors per query vector.
 
     Returns (query_id, neighbor_id, rank) — integer output so results are
     hash-stable across engines (scores drive the order but stay internal;
-    ties broken by neighbor id). ``ordered=False`` (r9) skips the final
-    presentational global sort — the ``rank`` column already carries the
-    order, and an order-insensitive consumer (hash gate, aggregation,
-    join) pays a range-sampling re-execution of the child plan for
-    nothing (the r8 sweep's lesson, extended into the operators)."""
+    ties broken by neighbor id)."""
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("qvec"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
@@ -159,65 +174,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     scored = (c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id",
                       cosine(F.col("qvec"), F.col("cvec")).alias("score")))
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
-
-
-def cosine_topk_pandas(corpus: DataFrame, queries: DataFrame, k: int = 10,
-                       id_col: str = "vec_id", vec_col: str = "embedding",
-                       ordered: bool = True) -> DataFrame:
-    """Vectorized scorer: numpy matmul per Arrow batch (the bench/scale
-    variant of :func:`cosine_topk`; identical results, verified in tests).
-
-    The query matrix is closed over (broadcast by pickling — small by
-    contract); each partition scores its batch against ALL queries in one
-    GEMM, keeps a local top-k, and the final global top-k per query is a
-    tiny shuffle of k*partitions rows."""
-    qrows = queries.select(id_col, vec_col).collect()  # queries are small by contract
-    if not qrows:
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, rank int")
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qmat = _to_matrix([r[1] for r in qrows], qids,
-                      "cosine_topk_pandas(queries)")
-    qmat = qmat / np.maximum(
-        np.linalg.norm(qmat, axis=1, keepdims=True), 1e-300)
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            mat = _to_matrix(pdf[vec_col], ids, "cosine_topk_pandas")
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-300)
-            sims = mat @ qmat.T                      # (batch, nq)
-            out = []
-            for qi, qid in enumerate(qids):
-                s = sims[:, qi]
-                mask = ids != qid
-                cand_ids, cand_s = ids[mask], s[mask]
-                idx = _topk_idx(cand_s, cand_ids, k)
-                if len(idx) == 0:
-                    continue
-                out.append(pd.DataFrame({
-                    "query_id": qid, "neighbor_id": cand_ids[idx],
-                    "score": cand_s[idx]}))
-            yield (pd.concat(out) if out
-                   else pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                                      "neighbor_id": pd.Series([], dtype="int64"),
-                                      "score": pd.Series([], dtype="float64")}))
-
-    partial = corpus.mapInPandas(
-        score, schema="query_id long, neighbor_id long, score double")
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    out = (partial.select("query_id", "neighbor_id",
-                          F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    # ordered=False (r9): rank carries the order; the global sort's
-    # range-sample re-executes the GEMM child (see cosine_topk)
-    return out.orderBy("query_id", "rank") if ordered else out
+    return _rank_topk(scored, k)
 
 
 # -- Random-hyperplane LSH -----------------------------------------------------
@@ -248,8 +205,8 @@ def lsh_signature(vec: Column, planes: list[list[float]]) -> Column:
 
 def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                  n_planes: int = 8, multiprobe: bool = True,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 ordered: bool = True) -> DataFrame:
+                 id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
     """ANN: hyperplane-LSH bucket join + exact re-rank inside the bucket.
 
     Sub-linear: each query only scores vectors sharing its bucket (expected
@@ -283,11 +240,7 @@ def ann_lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id",
                       cosine(F.col("qvec"), F.col("cvec")).alias("score")))
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
+    return _rank_topk(scored, k)
 
 
 # -- IVF-style coarse quantization ---------------------------------------------
@@ -313,7 +266,7 @@ def nearest_centroid(centroids: list[list[float]]) -> "Column":
     ``array_min`` — was measured 5-7 s SLOWER per job here: Catalyst spends
     seconds analyzing/codegen'ing the k*dim-literal tree every iteration.
     numpy GEMM over Arrow batches is the pragmatic production shape for
-    wide vectors, same as ``cosine_topk_pandas``.)"""
+    wide vectors, same as :func:`knn_graph`.)"""
     from pyspark.sql.functions import pandas_udf
 
     C = np.asarray(centroids, dtype=np.float64)          # (k, dim)
@@ -455,8 +408,7 @@ def assign_to_centroids(corpus: DataFrame, centroids: list[list[float]],
 def ann_ivf_topk_trained(corpus: DataFrame, queries: DataFrame,
                          centroids: list[list[float]], k: int = 10,
                          n_probe: int = 2, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         ordered: bool = True) -> DataFrame:
+                         vec_col: str = "embedding") -> DataFrame:
     """IVF ANN over a TRAINED codebook (kmeans_fit) instead of the label
     stand-in: assign corpus once, probe the n_probe nearest centroids per
     query, exact re-rank inside."""
@@ -464,13 +416,12 @@ def ann_ivf_topk_trained(corpus: DataFrame, queries: DataFrame,
     cdf = corpus.sparkSession.createDataFrame(
         [(i, c) for i, c in enumerate(centroids)],
         "centroid_id int, cvec array<double>")
-    return _ivf_probe(assigned, queries, cdf, k, n_probe, id_col,
-                      vec_col, ordered=ordered)
+    return _ivf_probe(assigned, queries, cdf, k, n_probe, id_col, vec_col)
 
 
 def _ivf_probe(assigned: DataFrame, queries: DataFrame, cdf: DataFrame,
-               k: int, n_probe: int, id_col: str, vec_col: str,
-               ordered: bool = True) -> DataFrame:
+               k: int, n_probe: int, id_col: str,
+               vec_col: str) -> DataFrame:
     """Shared IVF probe + re-rank: rank centroids by the SAME metric used
     for corpus assignment (squared euclidean — probing by a different
     metric would skip exactly the cell holding a query's true neighbors),
@@ -492,11 +443,7 @@ def _ivf_probe(assigned: DataFrame, queries: DataFrame, cdf: DataFrame,
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .select("query_id", "neighbor_id",
                       cosine(F.col("qvec"), F.col("cvec")).alias("score")))
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(), "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
+    return _rank_topk(scored, k)
 
 
 def ivf_centroids(corpus: DataFrame, label_col: str = "label",
@@ -516,8 +463,8 @@ def ivf_centroids(corpus: DataFrame, label_col: str = "label",
 
 def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                  n_probe: int = 2, label_col: str = "label",
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 ordered: bool = True) -> DataFrame:
+                 id_col: str = "vec_id",
+                 vec_col: str = "embedding") -> DataFrame:
     """IVF probe over the label stand-in codebook: per-label centroids,
     probe via the shared :func:`_ivf_probe` (same metric as assignment),
     exact re-rank inside. At scale the corpus is partitioned by label so
@@ -525,8 +472,7 @@ def ann_ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     cdf = (ivf_centroids(corpus, label_col, vec_col)
            .select("centroid_id", F.col("centroid").alias("cvec")))
     assigned = corpus.withColumn("centroid_id", F.col(label_col))
-    return _ivf_probe(assigned, queries, cdf, k, n_probe, id_col,
-                      vec_col, ordered=ordered)
+    return _ivf_probe(assigned, queries, cdf, k, n_probe, id_col, vec_col)
 
 
 # -- int8 storage quantization ------------------------------------------------
@@ -654,8 +600,7 @@ def pca_project(corpus: DataFrame, model: dict, id_col: str = "vec_id",
 def knn_graph(corpus: DataFrame, k: int = 5, id_col: str = "vec_id",
               vec_col: str = "embedding",
               with_score: bool = False,
-              max_closure_cells: int = 200_000_000,
-              ordered: bool = True) -> DataFrame:
+              max_closure_cells: int = 200_000_000) -> DataFrame:
     """Exact k-nearest-neighbor GRAPH: cosine top-k neighbors for EVERY
     corpus vector (queries == corpus) — the building block for kNN-graph
     near-dup clustering, SemDeDup-style pruning, and retrieval-augmented
@@ -663,11 +608,12 @@ def knn_graph(corpus: DataFrame, k: int = 5, id_col: str = "vec_id",
 
     Blocked GEMM, one pass, zero shuffle: the unit-normalized corpus
     matrix ships to every task as a closure constant (same "small by
-    contract" rule as :func:`cosine_topk_pandas` — fine to ~1e6 x 128
-    float64); each partition scores its block against the whole matrix in
-    one matmul and emits its OWN rows' top-k directly. Each row sees every
-    candidate, so no second aggregation/window is needed — the output is
-    exactly n*k rows straight out of the map stage.
+    contract" rule as the query matrix of :func:`pq_search` — fine to
+    ~1e6 x 128 float64); each partition scores its block against the
+    whole matrix in one matmul and emits its OWN rows' top-k directly.
+    Each row sees every candidate, so no second aggregation/window is
+    needed — the output is exactly n*k rows straight out of the map
+    stage.
 
     O(n^2) work by definition of an exact graph. Beyond closure size use
     :func:`knn_graph_ivf` (cluster-pruned, approximate) — same output
@@ -746,12 +692,7 @@ def knn_graph(corpus: DataFrame, k: int = 5, id_col: str = "vec_id",
     schema = "query_id long, neighbor_id long, rank int"
     if with_score:
         schema += ", score double"
-    out = corpus.mapInPandas(score, schema=schema)
-    # ordered=False (r9): the range-sampling pass of a global sort
-    # RE-EXECUTES the child plan — here that child is the full blocked
-    # GEMM, so a presentational sort on a hash-checked or aggregated
-    # output runs the O(n^2) scoring twice (measured ~2x at sf0.1)
-    return out.orderBy("query_id", "rank") if ordered else out
+    return corpus.mapInPandas(score, schema=schema)
 
 
 def _probes_udf(centroids: list[list[float]], n_probe: int):
@@ -924,29 +865,11 @@ def _ivf_cell_scored(q: DataFrame, members: DataFrame,
                                   "score double"))
 
 
-def _cross_cell_topk(scored: DataFrame, k: int,
-                     with_score: bool, ordered: bool = True) -> DataFrame:
-    """Merge per-cell candidate rows into the final per-query top-k:
-    (score desc, neighbor_id asc) — the same deterministic total order
-    as :func:`_topk_idx`, which is what makes incremental merging
-    exact (top-k of a union == top-k of per-part top-k unioned).
-    ``ordered=False`` skips the presentational global sort so a caller
-    unioning further branches pays it once, at the end."""
-    w = W.partitionBy("query_id").orderBy(F.col("score").desc(),
-                                          "neighbor_id")
-    cols = ["query_id", "neighbor_id", F.row_number().over(w).alias("rank")]
-    if with_score:
-        cols.append("score")
-    out = scored.select(*cols).filter(F.col("rank") <= k)
-    return out.orderBy("query_id", "rank") if ordered else out
-
-
 def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
                   n_probe: int = 2, iters: int = 3, id_col: str = "vec_id",
                   vec_col: str = "embedding",
                   with_score: bool = False,
                   centroids: list[list[float]] | None = None,
-                  ordered: bool = True,
                   index: DataFrame | None = None) -> DataFrame:
     """Approximate kNN graph at corpus scale: k-means coarse partition,
     each vector scores only the vectors in its ``n_probe`` nearest cells.
@@ -977,11 +900,6 @@ def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
     embeddings are REJECTED like :func:`knn_graph` rejects them (raised
     from the scoring task — the IVF path never collects the corpus, so
     the check lives executor-side at zero extra scans).
-
-    ``ordered=False`` (r8) skips the final presentational global sort —
-    a graph headed for a TABLE WRITE (the stored-graph build the
-    incremental path consumes) pays a range exchange + sort for
-    nothing; row content is identical either way.
 
     ``index`` (r9, VERDICT r8 #4): the persisted :func:`ivf_index`
     table. When given, BOTH sides of the cell equi-join read the
@@ -1019,8 +937,8 @@ def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
         q = index.select(F.col(id_col).alias("query_id"),
                          F.col(vec_col).alias("qvec"),
                          F.explode("probes").alias("centroid_id"))
-        return _cross_cell_topk(_ivf_cell_scored(q, members, k), k,
-                                with_score, ordered=ordered)
+        return _rank_topk(_ivf_cell_scored(q, members, k), k,
+                          with_score=with_score)
     if corpus is None:
         raise ValueError("knn_graph_ivf: pass corpus, or index (the "
                          "persisted ivf_index table)")
@@ -1030,8 +948,8 @@ def knn_graph_ivf(corpus: DataFrame | None, k: int = 5, kc: int = 8,
     assigned = assign_to_centroids(corpus, cents, id_col, vec_col)
     q = _ivf_probe_side(corpus, cents, n_probe, id_col, vec_col)
     members = _ivf_members_side(assigned, id_col, vec_col)
-    return _cross_cell_topk(_ivf_cell_scored(q, members, k), k,
-                            with_score, ordered=ordered)
+    return _rank_topk(_ivf_cell_scored(q, members, k), k,
+                      with_score=with_score)
 
 
 def _incremental_candidates(old_corpus: DataFrame | None,
@@ -1103,7 +1021,6 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
                               with_score: bool = False,
                               validate: bool = True,
                               old_index: DataFrame | None = None,
-                              ordered: bool = True,
                               index_width_checked: int | None = None,
                               ) -> DataFrame:
     """Daily-ingest kNN-graph maintenance: update the stored graph with
@@ -1286,7 +1203,7 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
     stored = old_graph.select("query_id", "neighbor_id", "score")
     changed = (stored.join(F.broadcast(touched), "query_id", "left_semi")
                .unionByName(fresh))
-    ranked = _cross_cell_topk(changed, k, with_score, ordered=False)
+    ranked = _rank_topk(changed, k, with_score=with_score)
     keep = ["query_id", "neighbor_id", "rank"] + (
         ["score"] if with_score else [])
     # rank <= k: a stored graph built with a LARGER k than requested is
@@ -1298,10 +1215,7 @@ def knn_graph_ivf_incremental(old_corpus: DataFrame | None,
                  .join(F.broadcast(touched), "query_id", "left_anti")
                  .filter(F.col("rank") <= k)
                  .select(*keep))
-    out = ranked.unionByName(untouched)
-    # ordered=False: table-write consumers (the streaming sink) skip
-    # the presentational global sort, same contract as knn_graph_ivf
-    return out.orderBy("query_id", "rank") if ordered else out
+    return ranked.unionByName(untouched)
 
 
 # -- product quantization (PQ / ADC search) ------------------------------------
@@ -1420,14 +1334,13 @@ def pq_encode(corpus: DataFrame, codebooks: list,
 
 def pq_search(codes_df: DataFrame, queries: DataFrame, codebooks: list,
               k: int = 10, id_col: str = "vec_id",
-              vec_col: str = "embedding",
-              ordered: bool = True) -> DataFrame:
+              vec_col: str = "embedding") -> DataFrame:
     """Asymmetric-distance (ADC) top-k over the PQ-encoded corpus: per
     query a (m x ks) lookup table of exact query-subvector-to-centroid
     squared distances, then every encoded row's approximate distance is
     m table lookups — no float vector is ever read at query time.
     Queries broadcast via the task closure (small-by-contract, the
-    :func:`cosine_topk_pandas` rule); each partition emits its local
+    :func:`knn_graph` rule); each partition emits its local
     top-k per query and one window merges. Returns (query_id,
     neighbor_id, rank)."""
 
@@ -1470,11 +1383,7 @@ def pq_search(codes_df: DataFrame, queries: DataFrame, codebooks: list,
 
     scored = codes_df.mapInPandas(
         scan, schema="query_id long, neighbor_id long, adc double")
-    w = W.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
+    return _rank_topk(scored, k, by="adc", descending=False)
 
 
 def recall_report(exact_edges: DataFrame,
@@ -1500,8 +1409,7 @@ def recall_report(exact_edges: DataFrame,
 def ivfpq_search(corpus: DataFrame, queries: DataFrame, k: int = 10,
                  kc: int = 8, n_probe: int = 2, m: int = 16, ks: int = 64,
                  iters: int = 3, id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 ordered: bool = True) -> DataFrame:
+                 vec_col: str = "embedding") -> DataFrame:
     """IVF-PQ (IVFADC, Jegou et al. 2011 §IV): the composition behind
     billion-scale ANN — a coarse k-means quantizer routes vectors to
     cells, each vector stores only the PQ codes of its RESIDUAL
@@ -1555,8 +1463,8 @@ def ivfpq_search(corpus: DataFrame, queries: DataFrame, k: int = 10,
     dsub = B[0].shape[1]
     qrows = queries.select(id_col, vec_col).collect()
     if not qrows:
-        # same empty contract as pq_search/cosine_topk_pandas — an empty
-        # query batch returns an empty result, never an AxisError
+        # same empty contract as pq_search — an empty query batch
+        # returns an empty result, never an AxisError
         return queries.sparkSession.createDataFrame(
             [], "query_id long, neighbor_id long, rank int")
     qids = np.asarray([r[0] for r in qrows], dtype=np.int64)
@@ -1610,11 +1518,7 @@ def ivfpq_search(corpus: DataFrame, queries: DataFrame, k: int = 10,
               .applyInPandas(_scan_cell,
                              schema="query_id long, neighbor_id long, "
                                     "adc double"))
-    w = W.partitionBy("query_id").orderBy("adc", "neighbor_id")
-    out = (scored.select("query_id", "neighbor_id",
-                         F.row_number().over(w).alias("rank"))
-           .filter(F.col("rank") <= k))
-    return out.orderBy("query_id", "rank") if ordered else out
+    return _rank_topk(scored, k, by="adc", descending=False)
 
 
 def rrf_fuse(rankings: list[DataFrame], id_col: str = "doc_id",
@@ -1653,8 +1557,7 @@ def rrf_fuse(rankings: list[DataFrame], id_col: str = "doc_id",
 def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 10,
                pool: int = 50, lam: float = 0.7,
                id_col: str = "vec_id",
-               vec_col: str = "embedding",
-               ordered: bool = True) -> DataFrame:
+               vec_col: str = "embedding") -> DataFrame:
     """Maximal-Marginal-Relevance diversified top-k (Carbonell &
     Goldstein 1998): greedily pick, per query, the candidate maximizing
     ``lam * sim(q, d) - (1 - lam) * max_{s in selected} sim(d, s)`` —
@@ -1721,10 +1624,9 @@ def mmr_rerank(corpus: DataFrame, queries: DataFrame, k: int = 10,
                                  + 0.5).astype(np.int64),
         })
 
-    out = pooled.groupBy("query_id").applyInPandas(
+    return pooled.groupBy("query_id").applyInPandas(
         _mmr, schema="query_id long, neighbor_id long, rank int, "
                      "mmr_nano long")
-    return out.orderBy("query_id", "rank") if ordered else out
 
 
 def jl_project(corpus: DataFrame, out_dim: int = 8, seed: int = 7,

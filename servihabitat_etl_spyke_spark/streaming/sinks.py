@@ -535,7 +535,7 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
             graph = _sim.knn_graph_ivf(corpus, k=k, n_probe=n_probe,
                                        id_col=id_col, vec_col=vec_col,
                                        centroids=centroids,
-                                       with_score=True, ordered=False)
+                                       with_score=True)
             _overwrite_via_tmp(graph, graph_path)
         elif not has_graph:
             # day-1 bootstrap: the first batch IS the corpus. Both
@@ -547,7 +547,7 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
             graph = _sim.knn_graph_ivf(rows, k=k, n_probe=n_probe,
                                        id_col=id_col, vec_col=vec_col,
                                        centroids=centroids,
-                                       with_score=True, ordered=False)
+                                       with_score=True)
             graph.write.mode("overwrite").parquet(graph_path)
         else:
             if not os.path.exists(index_path):
@@ -657,8 +657,7 @@ def stream_knn_graph_upsert(stream: DataFrame, graph_path: str,
                 None, old_graph, rows_eff, centroids, k=k,
                 n_probe=n_probe, id_col=id_col, vec_col=vec_col,
                 with_score=True, validate=validate,
-                old_index=old_index, ordered=False,
-                index_width_checked=index_width)
+                old_index=old_index, index_width_checked=index_width)
             if not skip_append:
                 (_sim.ivf_index(rows_eff, centroids, n_probe, id_col,
                                 vec_col)

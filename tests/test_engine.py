@@ -199,6 +199,33 @@ def test_delete_keeps_null_id_rows(spark, sf_dir):
     assert vals == {"null-row", "keepme-y"}
 
 
+def test_delete_matches_double_and_boolean_ids(spark, sf_dir):
+    """delete() removes exactly what read() finds: a JS "number" id is
+    a double (1 must match 1.0, not compare '1' with '1.0') and a
+    boolean id must match True (not 'True' with 'true'). NULL-id rows
+    survive either delete."""
+    eng = Engine(spark, sf_dir)
+    eng.create_model({"name": "g", "keys": {
+        "gid": {"type": "number", "modifiers": [{"name": "id"}]},
+        "v": {"type": "string"}}},
+        data=spark.createDataFrame(
+            [(1.0, "one"), (2.0, "two"), (None, "null-row")],
+            "gid double, v string"))
+    assert eng.read("g", 1) is not None
+    eng.delete("g", [1])
+    assert eng.read("g", 1) is None
+    assert {r.v for r in eng.table("g").collect()} == {"two", "null-row"}
+
+    eng.create_model({"name": "b", "keys": {
+        "flag": {"type": "boolean", "modifiers": [{"name": "id"}]},
+        "v": {"type": "string"}}},
+        data=spark.createDataFrame(
+            [(True, "yes"), (False, "no"), (None, "null-row")],
+            "flag boolean, v string"))
+    eng.delete("b", [True])
+    assert {r.v for r in eng.table("b").collect()} == {"no", "null-row"}
+
+
 def test_sheet_put_serializes_none_as_empty(spark, sf_dir):
     """Engine.put on a sheet model writes '' for None (an empty cell),
     never the text 'None' — the SheetTransport null contract."""

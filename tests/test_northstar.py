@@ -26,14 +26,6 @@ def _topk_sets(df):
     return out
 
 
-def test_pandas_topk_matches_exact(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    exact = SIM.cosine_topk(emb, queries, k=10)
-    fast = SIM.cosine_topk_pandas(emb, queries, k=10)
-    assert sorted(map(tuple, exact.collect())) == sorted(map(tuple, fast.collect()))
-
-
 def test_lsh_ann_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
@@ -218,8 +210,7 @@ def test_knn_graph_ivf_incremental_two_day_cycle(spark, sf_dir):
     day2 = emb.filter(F.col("vec_id") % 4 == 3)
     cents = SIM.kmeans_fit(base, k=4, iters=3)
     g0 = SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                           with_score=True,
-                           ordered=False).localCheckpoint()
+                           with_score=True).localCheckpoint()
     idx0 = SIM.ivf_index(base, cents, n_probe=2).localCheckpoint()
     g1 = SIM.knn_graph_ivf_incremental(
         None, g0, day1, cents, k=5, n_probe=2, with_score=True,
@@ -250,7 +241,7 @@ def test_ivf_index_partitioned_parquet_round_trip(spark, sf_dir,
     SIM.ivf_index(old, cents, n_probe=2).write.partitionBy(
         "centroid_id").parquet(str(tmp_path / "idx"))
     SIM.knn_graph_ivf(old, k=5, n_probe=2, centroids=cents,
-                      with_score=True, ordered=False).write.parquet(
+                      with_score=True).write.parquet(
         str(tmp_path / "graph"))
     idx = spark.read.parquet(str(tmp_path / "idx"))
     graph = spark.read.parquet(str(tmp_path / "graph"))
@@ -1606,18 +1597,16 @@ def test_distinct_ngrams_short_docs_no_crash_and_zero_grams(spark):
 def test_cosine_zero_norm_vector_never_ranks_first(spark):
     """An all-zero embedding must score 0.0 (not NaN — which Spark sorts
     ABOVE every real score under desc) and so can never displace a real
-    neighbor; the pandas scorer must agree with the column path."""
+    neighbor."""
     rows = [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0]),
             (4, [0.5, 0.5])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     q = emb.filter("vec_id = 1")
-    col_path = [(r["neighbor_id"], r["rank"]) for r in
-                SIM.cosine_topk(emb, q, k=3).collect()]
-    pd_path = [(r["neighbor_id"], r["rank"]) for r in
-               SIM.cosine_topk_pandas(emb, q, k=3).collect()]
-    assert col_path == pd_path
-    assert col_path[0][0] == 2          # the real nearest, not the zero vec
-    assert col_path[-1][0] == 3         # zero vector ranks last (score 0)
+    col_path = [n for _, n in sorted(
+        (r["rank"], r["neighbor_id"])
+        for r in SIM.cosine_topk(emb, q, k=3).collect())]
+    assert col_path[0] == 2             # the real nearest, not the zero vec
+    assert col_path[-1] == 3            # zero vector ranks last (score 0)
 
 
 def test_topk_idx_resolves_boundary_ties_by_id():
@@ -1635,12 +1624,46 @@ def test_topk_idx_resolves_boundary_ties_by_id():
     assert ids[idx].tolist() == [9, 5]      # 0.3-tie resolved to id 5 < 7
 
 
+def test_rank_topk_matches_brute_force_sort(spark):
+    """The per-query ranking step every similarity operator ends with
+    equals a brute-force per-query sort, in both directions: best score
+    first, ties (also at the k boundary) to the lower neighbor_id, rank
+    1..k, and the score column only when asked for."""
+    rows = [(1, 10, 0.9), (1, 11, 0.5), (1, 12, 0.5), (1, 13, 0.5),
+            (1, 14, 0.1), (2, 20, 0.3), (2, 21, 0.7), (2, 22, 0.3),
+            (3, 30, 0.2)]
+    scored = spark.createDataFrame(
+        rows, "query_id long, neighbor_id long, score double")
+    k = 3
+    for descending in (True, False):
+        want = []
+        for q in sorted({r[0] for r in rows}):
+            cands = sorted((r for r in rows if r[0] == q),
+                           key=lambda r: (-r[2] if descending else r[2],
+                                          r[1]))
+            want += [(q, n, rank) for rank, (_, n, _) in
+                     enumerate(cands[:k], start=1)]
+        got = SIM._rank_topk(scored, k, descending=descending)
+        assert got.columns == ["query_id", "neighbor_id", "rank"]
+        assert sorted(map(tuple, got.collect())) == sorted(want)
+        # query 1 ties three ways at 0.5 across the k boundary: the
+        # highest tied id is the one cut, in either direction
+        assert (1, 13) not in {(q, n) for q, n, _ in want}
+
+    adc = scored.withColumnRenamed("score", "adc")
+    got = SIM._rank_topk(adc, k, by="adc", descending=False,
+                         with_score=True)
+    assert got.columns == ["query_id", "neighbor_id", "rank", "adc"]
+    assert sorted(tuple(r) for r in got.collect() if r["query_id"] == 1) \
+        == [(1, 11, 2, 0.5), (1, 12, 3, 0.5), (1, 14, 1, 0.1)]
+
+
 def test_ann_empty_queries_and_corpus_raise_or_return_empty(spark):
     import pytest
     emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
     some = spark.createDataFrame([(1, [1.0, 0.0])],
                                  "vec_id long, embedding array<double>")
-    assert SIM.cosine_topk_pandas(some, emb, k=3).count() == 0
+    assert SIM.cosine_topk(some, emb, k=3).count() == 0
     assert SIM.knn_graph(emb, k=2).count() == 0
     with pytest.raises(ValueError, match="empty input"):
         SIM.ann_lsh_topk(emb, some, k=2)
@@ -1766,18 +1789,18 @@ def test_psi_drift_excludes_nulls_and_pagerank_empty_schema(spark):
     assert dict(pr.dtypes)["v"] == "string"
 
 
-def test_pagerank_final_checkpoint_pins_result(spark):
-    """r8 ADVICE: ``final_checkpoint=True`` materializes the ranks so a
-    multi-action consumer re-reads pinned values (no re-execution of
-    the final sub-interval, no fold-order rank drift across actions).
-    Witness: the returned plan is a checkpointed RDD scan with NO join,
-    while the default lazy form still carries the iteration joins; the
-    pinned values equal the lazy ones."""
+def test_pagerank_local_checkpoint_pins_result(spark):
+    """A multi-action consumer pins the ranks with ``.localCheckpoint()``
+    on the returned frame, so it re-reads pinned values (no
+    re-execution of the final sub-interval, no fold-order rank drift
+    across actions). Witness: the pinned plan is a checkpointed RDD
+    scan with NO join, while the lazy result still carries the
+    iteration joins; the pinned values equal the lazy ones."""
     from servihabitat_etl_spyke_spark.operators.graph import pagerank
     edges = spark.createDataFrame(
         [(0, 1), (1, 2), (2, 3), (3, 0), (1, 3)], "id_a long, id_b long")
     lazy = pagerank(edges, iters=6)
-    pinned = pagerank(edges, iters=6, final_checkpoint=True)
+    pinned = pagerank(edges, iters=6).localCheckpoint()
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
         .fromString("simple")
     lazy_plan = lazy._jdf.queryExecution().explainString(mode)
@@ -2045,7 +2068,6 @@ def test_ann_kernels_reject_null_and_ragged_embeddings(spark):
     rows = [(i, [float(i + 1), 2.0, 1.0, 0.5]) for i in range(20)]
     rows[7] = (7, None)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qs = df.filter(F.col("vec_id") < 3)
 
     with pytest.raises(ValueError, match=r"NULL embedding.*\[7\]"):
         SIM.knn_graph(df, k=3).count()
@@ -2053,8 +2075,11 @@ def test_ann_kernels_reject_null_and_ragged_embeddings(spark):
         SIM.knn_graph_ivf(df, k=3, kc=2, n_probe=1, iters=2).count()
     with pytest.raises(Exception, match="NULL embedding"):
         SIM.kmeans_fit(df, k=2, iters=2)
-    with pytest.raises(Exception, match=r"NULL embedding.*\[7\]"):
-        SIM.cosine_topk_pandas(df, qs, k=3).count()
+    books = [[[1.0, 2.0], [3.0, 2.0]], [[1.0, 0.5], [0.0, 0.0]]]
+    codes = SIM.pq_encode(df.filter(F.col("vec_id") != 7), books)
+    with pytest.raises(ValueError, match=r"NULL embedding.*\[7\]"):
+        SIM.pq_search(codes, df.filter(F.col("vec_id").between(5, 9)),
+                      books, k=3)
     with pytest.raises(Exception, match="NULL embedding"):
         SIM.assign_to_centroids(
             df, [[1.0, 2.0, 1.0, 0.5], [3.0, 2.0, 1.0, 0.5]]

@@ -583,6 +583,38 @@ def test_pagerank_iteration_is_one_join_one_agg(spark):
     assert plan.count("Join LeftAnti") == 0
 
 
+def test_similarity_operators_add_no_global_sort(spark):
+    """The similarity operators return rank-carrying, UNSORTED output:
+    ``rank`` already holds the order, and a presentational global sort
+    would add a range exchange whose sampling pass re-executes the
+    scoring plan. Called directly with their defaults on a tiny frame,
+    none may plan a RangePartitioning."""
+    from servihabitat_etl_spyke_spark.operators import similarity as SIM
+    emb = spark.createDataFrame(
+        [(i, i % 2, [1.0 + i % 3, float(i % 5), 1.0, 0.5 + i])
+         for i in range(12)],
+        "vec_id long, label int, embedding array<double>")
+    q = emb.filter("vec_id < 3")
+    books = SIM.pq_train(emb, m=2, ks=2, iters=1)
+    outs = {
+        "cosine_topk": SIM.cosine_topk(emb, q, k=3),
+        "ann_lsh_topk": SIM.ann_lsh_topk(emb, q, k=3, n_planes=2),
+        "ann_ivf_topk": SIM.ann_ivf_topk(emb, q, k=3, n_probe=1),
+        "knn_graph": SIM.knn_graph(emb, k=3),
+        "knn_graph_ivf": SIM.knn_graph_ivf(emb, k=3, kc=2, n_probe=1,
+                                           iters=1),
+        "pq_search": SIM.pq_search(SIM.pq_encode(emb, books), q, books,
+                                   k=3),
+        "mmr_rerank": SIM.mmr_rerank(emb, q, k=2, pool=4),
+    }
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode \
+        .fromString("formatted")
+    sorted_ops = [name for name, df in outs.items()
+                  if "rangepartitioning" in df._jdf.queryExecution()
+                  .explainString(mode).lower()]
+    assert not sorted_ops, sorted_ops
+
+
 def test_knn_graph_incremental_prunes_with_broadcast_semi(spark, sf_dir):
     """Incremental kNN-graph scan gate (r7 prunes + r8 #2a): in the
     LAZY fresh-candidate plan, BOTH streams entering the cogroup

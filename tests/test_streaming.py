@@ -1105,7 +1105,7 @@ def test_stream_knn_graph_upsert_self_heals_stranded_windows(
          .write.partitionBy("centroid_id")
          .parquet(str(tmp_path / f"{tag}_i")))
         (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                           with_score=True, ordered=False)
+                           with_score=True)
          .write.parquet(str(tmp_path / f"{tag}_g")))
 
     # --- window A: index appended, graph write crashed -------------
@@ -1217,7 +1217,7 @@ def test_stream_knn_graph_upsert_rebuilds_lost_graph_from_index(
     (SIM.ivf_index(base, cents, n_probe=2)
      .write.partitionBy("centroid_id").parquet(ip))
     (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                       with_score=True, ordered=False).write.parquet(gp))
+                       with_score=True).write.parquet(gp))
     shutil.rmtree(gp)                       # the disaster: graph lost
 
     src = tmp_path / "feed"
@@ -1269,7 +1269,7 @@ def test_stream_knn_graph_upsert_heals_interrupted_swap(
     (SIM.ivf_index(base, cents, n_probe=2)
      .write.partitionBy("centroid_id").parquet(ip))
     (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                       with_score=True, ordered=False).write.parquet(gp))
+                       with_score=True).write.parquet(gp))
     os.rename(gp, gp + "._old")             # mid-swap crash state
 
     src = tmp_path / "feed"
@@ -1321,7 +1321,7 @@ def test_stream_knn_graph_upsert_disaster_rebuild_mixed_batch(
     (SIM.ivf_index(base, cents, n_probe=2)
      .write.partitionBy("centroid_id").parquet(ip))
     (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                       with_score=True, ordered=False).write.parquet(gp))
+                       with_score=True).write.parquet(gp))
     shutil.rmtree(gp)                       # graph + checkpoint lost
 
     src = tmp_path / "feed"
@@ -1380,7 +1380,7 @@ def test_stream_knn_graph_upsert_disaster_rebuild_nprobe_guard(
          .write.partitionBy("centroid_id").parquet(ip))
         if with_graph:
             (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                               with_score=True, ordered=False)
+                               with_score=True)
              .write.parquet(gp))
         return gp, ip
 
@@ -1438,14 +1438,14 @@ def test_stream_knn_graph_upsert_replay_of_neighbor_only_batch(
     (SIM.ivf_index(old, cents, n_probe=2)
      .write.partitionBy("centroid_id").parquet(ip))
     g0 = SIM.knn_graph_ivf(old, k=2, n_probe=2, centroids=cents,
-                           with_score=True, ordered=False)
+                           with_score=True)
     g0.write.parquet(gp)
     # apply the batch FULLY by hand (validate=False: the 2-vector
     # corpus has stored max rank 1 < k)
     g1 = SIM.knn_graph_ivf_incremental(
         None, spark.read.parquet(gp), vrow, cents, k=2, n_probe=2,
         validate=False, old_index=spark.read.parquet(ip),
-        with_score=True, ordered=False).localCheckpoint()
+        with_score=True).localCheckpoint()
     # premise guard: v is a neighbor somewhere, a query nowhere
     assert g1.filter(F.col("query_id") == 9).count() == 0
     assert g1.filter(F.col("neighbor_id") == 9).count() > 0
@@ -1498,7 +1498,7 @@ def test_stream_knn_graph_upsert_mixed_batch_fresh_checkpoint(
     (SIM.ivf_index(base, cents, n_probe=2)
      .write.partitionBy("centroid_id").parquet(ip))
     (SIM.knn_graph_ivf(base, k=5, n_probe=2, centroids=cents,
-                       with_score=True, ordered=False).write.parquet(gp))
+                       with_score=True).write.parquet(gp))
 
     src = tmp_path / "feed"
     src.mkdir()

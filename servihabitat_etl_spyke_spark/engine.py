@@ -21,7 +21,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import load_table, register_views
+from .catalog import load_table, load_tables
 from .model import Model
 from .plans.listquery import ListParams, list_page, list_query
 from .session import get_spark
@@ -40,10 +40,8 @@ class Engine:
         self._storage: dict[str, str] = {}
         # named parameterized automations (UD1, protolib automations)
         self._automations: dict = {}
-        # bumped on EVERY register_model call (a len()-based check would
-        # miss same-name re-registration and never refresh the SQL views)
-        self._registry_version = 0
-        self._views_version = -1  # forces first-use view registration
+        # SQL view name -> the DataFrame it was last registered with
+        self._views: dict[str, DataFrame] = {}
 
     @classmethod
     def local(cls, sf_dir: str, cpus: int | None = None) -> "Engine":
@@ -57,7 +55,6 @@ class Engine:
         """Runtime DDL analog (objects bundle, objectsAPI.ts:133-193): a new
         model becomes queryable immediately — no codegen, just metadata."""
         self._models[model.name] = model
-        self._registry_version += 1
 
     def create_model(self, spec, data: list | DataFrame | None = None,
                      bind_to: str | None = None,
@@ -198,7 +195,6 @@ class Engine:
                .filter(F.col("_rn") == 1).drop("_o", "_rn"))
         self._runtime_tables[model_name] = sheet_upsert(
             cur, upd, m.id_field)
-        self._registry_version += 1   # refresh SQL views on next use
 
     def read(self, model_name: str, item_id, view: str = "read") -> dict | None:
         """Point read by id (the AutoAPI GET-one endpoint): one row as a
@@ -237,7 +233,6 @@ class Engine:
         # would silently destroy every null-id row
         self._runtime_tables[model_name] = cur.filter(
             F.col(m.id_field).isNull() | ~hit)
-        self._registry_version += 1
 
     def model(self, name: str) -> Model:
         return self._models[name]
@@ -299,36 +294,28 @@ class Engine:
                          params)
 
     def sql(self, statement: str) -> DataFrame:
-        """ANSI SQL over the standard tables AND every registered model
-        (views refresh when the model registry grows, so runtime-registered
-        models are immediately SQL-visible)."""
-        if self._views_version != self._registry_version:
-            from pyspark.errors import AnalysisException
-            # parquet views are static — register once per engine, not
-            # once per registry bump (a put()->sql() loop would re-read
-            # every table's footer each iteration otherwise)
-            if self._views_version < 0:
-                register_views(self.spark, self.sf_dir)
-            if not hasattr(self, "_registered_views"):
-                self._registered_views: set[str] = set()
-            for name in self._models:
-                # parquet-backed models are as static as the standard
-                # views — register each ONCE; only RUNTIME tables change
-                # between registry bumps, so skip the eager footer
-                # re-read per put()->sql() iteration for everything
-                # already registered
-                if (name in self._registered_views
-                        and name not in self._runtime_tables):
-                    continue
-                try:
-                    self.table(name).createOrReplaceTempView(name)
-                    self._registered_views.add(name)
-                except AnalysisException as e:
-                    # only "no backing file yet" is benign; schema
-                    # corruption / permission errors must surface
-                    if "PATH_NOT_FOUND" not in str(e):
-                        raise
-            self._views_version = self._registry_version
+        """ANSI SQL over the standard tables AND every registered model.
+
+        Each call resolves every view again — parquet through
+        ``load_table``, runtime models from their store — and re-registers
+        only the views whose DataFrame changed. A model registered or
+        ``put()`` since the last call is visible at once, and a parquet
+        path rewritten on disk is served from its new files, never from
+        the deleted snapshot an older handle listed."""
+        from pyspark.errors import AnalysisException
+        views = load_tables(self.spark, self.sf_dir)
+        for name in self._models:
+            try:
+                views[name] = self.table(name)
+            except AnalysisException as e:
+                # only "no backing file yet" is benign; schema
+                # corruption / permission errors must surface
+                if "PATH_NOT_FOUND" not in str(e):
+                    raise
+        for name, df in views.items():
+            if self._views.get(name) is not df:
+                df.createOrReplaceTempView(name)
+                self._views[name] = df
         return self.spark.sql(statement)
 
     def register_automation(self, name: str, fn) -> None:

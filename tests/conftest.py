@@ -21,3 +21,25 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def jobs_started(spark):
+    """``jobs_started(fn)`` calls ``fn()`` under a fresh job group and
+    returns how many Spark jobs it started, read from the status tracker
+    once the listener bus has delivered every event."""
+    import itertools
+
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def count(fn) -> int:
+        group = f"jobs-started-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    return count

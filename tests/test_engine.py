@@ -332,3 +332,45 @@ def test_r6_engine_and_source_guards(spark, tmp_path):
                                "id long, prompt string, completion string")
     with pytest.raises(ValueError, match="already exists"):
         llm_enrich(df, "prompt", client=lambda xs: xs)
+
+
+def test_sql_serves_current_snapshot_after_upsert(spark, tmp_path):
+    """A parquet-backed model rewritten by upsert_into_path (a directory
+    swap that deletes the old part files) must be served from its new
+    files; a view over the first snapshot failed with FILE_NOT_EXIST."""
+    from servihabitat_etl_spyke_spark.operators.etl import upsert_into_path
+    path = str(tmp_path / "things.parquet")
+    schema = "id long, v string"
+    upsert_into_path(spark, spark.createDataFrame(
+        [(1, "a"), (2, "b")], schema), path)
+    e = Engine(spark, str(tmp_path))
+    e.register_model(model("things", FieldSpec("id", is_id=True)))
+    assert e.sql("SELECT count(*) AS n FROM things").first()["n"] == 2
+    upsert_into_path(spark, spark.createDataFrame(
+        [(2, "c"), (3, "d")], schema), path)
+    got = e.sql("SELECT v FROM things ORDER BY id").collect()
+    assert [r["v"] for r in got] == ["a", "c", "d"]
+
+
+#: Spark jobs one warm request starts at sf0.001 (each request used to
+#: start one more: the parquet footer job of a fresh table read)
+SERVING_JOBS = {
+    "read": (lambda e: e.read("orders", 1), 1),
+    "list_filter": (lambda e: e.list(
+        "orders", filter={"o_orderstatus": "F"}).collect(), 1),
+    "list_search": (lambda e: e.list(
+        "customer", search="c_mktsegment:building").collect(), 1),
+    "list_group": (lambda e: e.list(
+        "orders", group="o_orderpriority").collect(), 2),
+    "list_deep_page": (lambda e: e.list("events", page=40).collect(), 1),
+    "page": (lambda e: e.page(
+        "orders", filter={"o_orderstatus": "F"}, order_by="o_totalprice",
+        order_direction="desc", page=1)["items"].collect(), 3),
+}
+
+
+@pytest.mark.parametrize("request_kind", sorted(SERVING_JOBS))
+def test_serving_request_job_count(eng, jobs_started, request_kind):
+    call, jobs = SERVING_JOBS[request_kind]
+    call(eng)                                   # warm
+    assert jobs_started(lambda: call(eng)) == jobs
